@@ -525,16 +525,12 @@ def _q_streaming_search_bizcards(spark, sf_dir):
     create-or-replace maintainer, then served from the converged index.
     Must equal from-scratch search over the whole corpus —
     search_bizcards' oracle verbatim."""
-    import hashlib
-    import tempfile
-
     from social_graph_based_people_recommender_using_amazon_neptune_and_textract_spark.search.incremental import (
         IncrementalIndexer,
     )
 
     b = _bizcards_df(spark, sf_dir)
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    ix = IncrementalIndexer(spark, f"{tempfile.gettempdir()}/sgr-esix-{key}")
+    ix = IncrementalIndexer(spark, _scratch("sgr-esix-"))
     for i in range(3):
         ix.upsert(b.filter(F.pmod(F.hash("doc_id"), F.lit(3)) == i))
     return ix.search(oracles.BIZCARD_QUERY, limit=10)

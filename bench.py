@@ -70,7 +70,8 @@ BENCH_QUERIES = [
     "split_contamination",
     # pymk_all_top5 precedes pymk_user_3: the batch pin is the fill,
     # the single-user query then times the Redis-GET serving path
-    # (graph/pymk.py _pymk_named_from_pin) — the production order.
+    # (graph/pymk.py _pymk_served_from_pin plus hydration) — the
+    # production order.
     "pymk_all_top5",
     "pymk_user_3",
     "pymk_user_3_ppr",

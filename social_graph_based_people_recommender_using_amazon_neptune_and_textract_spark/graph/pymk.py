@@ -34,26 +34,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..pinned import memo, pinned
-
-
-def _bi(edges: DataFrame) -> DataFrame:
-    """The symmetrized edge view, pinned once per edge relation (it feeds
-    multiple joins in every PYMK variant; the pinned registry gives the
-    caller an explicit release handle instead of a leaked persist).
-
-    Pinned HASH-PARTITIONED on ``src`` — the clustered layout a graph
-    store keeps (adjacency grouped by vertex): the 2-hop self-join's
-    b-side, the friend-pair distinct, and the degree probe all consume
-    exactly this partitioning, so each skips its Exchange against the
-    cached view (measured: one fewer shuffle and ~2× faster batch PYMK
-    at sf0.1). One exchange is paid once at pin materialization; the
-    in-memory equivalent of bucketing the edge table by src
-    (sources/bucketed.py is the on-disk form). Shared with PageRank/PPR
-    (graph/rank.py) via model.pinned_bi — one layout per process."""
-    from .model import pinned_bi
-
-    return pinned_bi(edges)
+from ..pinned import memo, pinned, pinned_keys
+from .model import pinned_bi
 
 
 def _v(vertices: DataFrame) -> DataFrame:
@@ -85,11 +67,13 @@ def pymk_scored(
     (cand_id, score) under the declared order — before hydration.
 
     Physical strategy (runtime-adaptive, like the whale probe below):
-    collect the start vertex and its hop-1 bag when small (two point
-    lookups against the pinned relations), score with literal weights;
-    otherwise fall back to the broadcast-join plan. Both produce
-    identical rows — the fallback equivalence is pinned in tests."""
-    bi = _bi(edges)
+    when the all-users batch pin is live, read the user's rows from it
+    (``_pymk_served_from_pin``); otherwise collect the start vertex and
+    its hop-1 bag when small (two point lookups against the pinned
+    relations) and score with literal weights, or fall back to the
+    broadcast-join plan for large bags and ambiguous names. All three
+    produce identical rows — the equivalences are pinned in tests."""
+    bi = pinned_bi(edges)
 
     # O38a/b: case-insensitive start-vertex lookup via the _name property
     # — a point lookup against the pinned vertex relation, MEMOIZED per
@@ -141,19 +125,21 @@ def _pymk_served_from_pin(
     filter makes the served rows bit-identical to the live traversal —
     both are the same bag-count relation under the same (score desc,
     id asc) cut, an equivalence the property suite pins."""
-    from ..pinned import pinned, pinned_keys
-
     if int(limit) > PYMK_PIN_LIMIT:
         return None
-    key = _pymk_all_pin_key(edges, WHALE_DEGREE_CAP, SALT_R)
+    key = _pymk_all_pin_key(edges)
     if key not in pinned_keys():
         return None
     (rec,) = pinned(key, lambda: (_ for _ in ()).throw(AssertionError))
+    # ≤limit rows survive the filters: coalesce(1) + a local sort IS the
+    # total order, without orderBy's range-sampling pre-job — the read
+    # stays one single-task job over the stats-pruned cached scan.
     return (
         rec.filter(F.col("user_id") == F.lit(me_id))
         .filter(F.col("rank") <= int(limit))
         .select(F.col("id").alias("cand_id"), "score")
-        .orderBy(F.desc("score"), F.asc("cand_id"))
+        .coalesce(1)
+        .sortWithinPartitions(F.desc("score"), F.asc("cand_id"))
     )
 
 
@@ -246,78 +232,6 @@ def _pymk_scored_distributed(
     )
 
 
-def _pymk_named_from_pin(
-    vertices: DataFrame, edges: DataFrame, user_name: str, limit: int
-) -> DataFrame | None:
-    """Serve one user's HYDRATED (id, name, score) rows from a pinned
-    named recommendation table — the full Redis read path of the
-    reference, which cached the hydrated response JSON, not bare ids
-    (neptune_recommend_bizcard.py:87-99). The named table is the base
-    ``pinned_pymk_all`` pin joined once against the vertex props and is
-    built lazily on the FIRST serve after the batch pin exists (one
-    |users|·limit-row join); it never triggers the Σdeg² batch itself.
-    After that a serve is a single cached-scan filter. Returns None
-    when the batch pin is not live, the name is ambiguous (the live
-    traversal's merged-bag semantics are not expressible from a per-
-    user cut), or the request is deeper than the pin."""
-    from ..pinned import pinned, pinned_keys
-
-    if int(limit) > PYMK_PIN_LIMIT:
-        return None
-    base_key = _pymk_all_pin_key(edges, WHALE_DEGREE_CAP, SALT_R)
-    if base_key not in pinned_keys():
-        return None
-    me_rows = memo(
-        ("pymk_me", vertices.semanticHash(), user_name.lower()),
-        lambda: [
-            r["me_id"]
-            for r in _v(vertices)
-            .filter(F.col("_name") == user_name.lower())
-            .select(F.col("id").alias("me_id"))
-            .limit(2)
-            .collect()
-        ],
-        parent=("graph_v", vertices.semanticHash()),
-    )
-    if len(me_rows) != 1:
-        return None
-
-    def _build():
-        (rec,) = pinned(base_key, lambda: (_ for _ in ()).throw(AssertionError))
-        props = _v(vertices).select(
-            F.col("id").alias("v_id"), F.col("name").alias("v_name")
-        )
-        return (
-            rec.join(props, rec["id"] == props["v_id"]).select(
-                "user_id",
-                "id",
-                F.col("v_name").alias("name"),
-                "score",
-                "rank",
-            ).repartitionByRange(PYMK_SERVE_PARTITIONS, "user_id"),
-        )
-
-    (named,) = pinned(
-        (
-            "pymk_all_named",
-            edges.semanticHash(),
-            vertices.semanticHash(),
-            PYMK_PIN_LIMIT,
-        ),
-        _build,
-    )
-    # ≤limit rows survive the filter: coalesce(1) + a local sort IS the
-    # total order, without orderBy's range-sampling pre-job — the serve
-    # stays one single-task job over the stats-pruned cached scan.
-    return (
-        named.filter(F.col("user_id") == F.lit(me_rows[0]))
-        .filter(F.col("rank") <= int(limit))
-        .select("id", "name", "score")
-        .coalesce(1)
-        .sortWithinPartitions(F.desc("score"), F.asc("id"))
-    )
-
-
 def pymk(
     vertices: DataFrame, edges: DataFrame, user_name: str, limit: int = 10
 ) -> DataFrame:
@@ -328,13 +242,8 @@ def pymk(
     (neptune_recommend_bizcard.py:70); we additionally keep ``id`` as the
     deterministic row identity (documented refinement, SURVEY R4).
 
-    When the per-snapshot batch pin is live, the whole response —
-    hydration included — serves from the pinned NAMED table
-    (``_pymk_named_from_pin``), bit-identical to the live traversal;
-    otherwise the adaptive live plan runs."""
-    served = _pymk_named_from_pin(vertices, edges, user_name, limit)
-    if served is not None:
-        return served
+    ``pymk_scored`` picks the pin-served or the live plan; only the
+    hydration join below differs from ``pymk_hydrated``."""
     scored = pymk_scored(vertices, edges, user_name, limit)
 
     # O38k / O36: hydrate candidate ids from the vertex table. Renamed
@@ -459,12 +368,7 @@ def _hop2_pairs(bi: DataFrame, whale_degree_cap: int, salt_r: int) -> DataFrame:
     return hop2_normal.unionAll(hop2_whale)
 
 
-def pymk_all(
-    edges: DataFrame,
-    limit: int = 10,
-    whale_degree_cap: int = WHALE_DEGREE_CAP,
-    salt_r: int = SALT_R,
-) -> DataFrame:
+def pymk_all(edges: DataFrame, limit: int = 10) -> DataFrame:
     """PYMK for every user at once (the batch/scale variant; SURVEY §4.3).
 
     Returns (user_id, id, score, rank) — top-``limit`` recommendations per
@@ -475,17 +379,17 @@ def pymk_all(
     aggregated and the other half is mirrored afterwards — halving the
     rows the (user, cand) hash-aggregate must absorb from the Σdeg²-row
     join output. Aggregation still happens BEFORE the friend anti-join
-    (collapse the bag first), and whale join keys are salted
-    (``_hop2_pairs``)."""
+    (collapse the bag first), and whale join keys — degree above
+    ``WHALE_DEGREE_CAP`` — are salted ``SALT_R`` ways (``_hop2_pairs``)."""
     # bi feeds the self-join twice plus the friend-pair anti-join —
     # pinned (at cluster scale: checkpoint/bucketed materialization).
-    bi = _bi(edges)
+    bi = pinned_bi(edges)
 
     # Probe once per (corpus, cap) whether any whale exists; the salted
     # split is a physical rewrite, so skipping it on whale-free graphs
     # changes nothing but the plan (equivalence pinned in tests).
-    if _has_whales(bi, ("graph_bi", edges.semanticHash()), whale_degree_cap):
-        hop2 = _hop2_pairs(bi, whale_degree_cap, salt_r)
+    if _has_whales(bi, ("graph_bi", edges.semanticHash()), WHALE_DEGREE_CAP):
+        hop2 = _hop2_pairs(bi, WHALE_DEGREE_CAP, SALT_R)
     else:
         hop2 = _hop2_pairs_plain(bi)
     # Exclude self; keep one triangle half (score matrix is symmetric).
@@ -549,58 +453,28 @@ PYMK_PIN_LIMIT = 10
 PYMK_SERVE_PARTITIONS = 8
 
 
-def _pymk_all_pin_key(
-    edges: DataFrame, whale_degree_cap: int, salt_r: int
-) -> tuple:
-    return (
-        "pymk_all",
-        edges.semanticHash(),
-        PYMK_PIN_LIMIT,
-        int(whale_degree_cap),
-        int(salt_r),
-    )
+def _pymk_all_pin_key(edges: DataFrame, depth: int = PYMK_PIN_LIMIT) -> tuple:
+    return ("pymk_all", edges.semanticHash(), int(depth))
 
 
-def pinned_pymk_all(
-    edges: DataFrame,
-    limit: int = 10,
-    whale_degree_cap: int = WHALE_DEGREE_CAP,
-    salt_r: int = SALT_R,
-) -> DataFrame:
+def pinned_pymk_all(edges: DataFrame, limit: int = 10) -> DataFrame:
     """``pymk_all`` as a PINNED batch product keyed per edge set: the
     all-users recommendation table is what a production PYMK system
     computes per corpus snapshot and SERVES — the reference's per-user
     Redis cache (es/neptune_recommend…:87-99, TTL 600 s) is the per-key
     view of exactly this table, and release is the TTL. The
     Σdeg²-bounded 2-hop batch (the expensive part) runs once at
-    ``PYMK_PIN_LIMIT`` depth; every serve — any ``limit`` up to that —
-    reads the |users|·limit-row relation through a rank filter (rank is
-    computed once under the declared total order, so the filtered
-    relation is bit-identical to a native ``pymk_all(limit)``).
-    ``limit`` above the canonical depth falls through to a dedicated
-    full-depth pin."""
-    from ..pinned import pinned
-
-    if int(limit) <= PYMK_PIN_LIMIT:
-        (rec,) = pinned(
-            _pymk_all_pin_key(edges, whale_degree_cap, salt_r),
-            lambda: (
-                pymk_all(
-                    edges, PYMK_PIN_LIMIT, whale_degree_cap, salt_r
-                ).repartitionByRange(PYMK_SERVE_PARTITIONS, "user_id"),
-            ),
-        )
-        if int(limit) == PYMK_PIN_LIMIT:
-            return rec
-        return rec.filter(F.col("rank") <= int(limit))
+    ``PYMK_PIN_LIMIT`` depth (or at ``limit`` when that is deeper); every
+    serve reads the |users|·depth-row relation through a rank filter
+    (rank is computed once under the declared total order, so the
+    filtered relation is bit-identical to a native ``pymk_all(limit)``)."""
+    depth = max(int(limit), PYMK_PIN_LIMIT)
     (rec,) = pinned(
-        (
-            "pymk_all",
-            edges.semanticHash(),
-            int(limit),
-            int(whale_degree_cap),
-            int(salt_r),
+        _pymk_all_pin_key(edges, depth),
+        lambda: (
+            pymk_all(edges, depth).repartitionByRange(
+                PYMK_SERVE_PARTITIONS, "user_id"
+            ),
         ),
-        lambda: (pymk_all(edges, limit, whale_degree_cap, salt_r),),
     )
-    return rec
+    return rec.filter(F.col("rank") <= int(limit))

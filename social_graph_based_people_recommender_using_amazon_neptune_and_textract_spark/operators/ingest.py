@@ -41,14 +41,11 @@ def parse_bizcard_text(df: DataFrame, created_at: str = "2024-01-01T00:00:00Z") 
     )
 
 
-def bizcards_from_text(text: DataFrame) -> DataFrame:
-    """upsert_bizcard_to_es.py:62-90 — derive the D3 searchable document
-    and apply the ES upsert semantics (same ``_id`` ⇒ last write wins).
-
-    Batch ingest has no arrival order, so "last" is declared as the lexic
-    max s3_key per doc_id — deterministic and idempotent. doc_id is
-    md5(image_id)[:8]; with unique filenames the upsert is a no-op dedup.
-    """
+def latest_docs(text: DataFrame) -> DataFrame:
+    """upsert_bizcard_to_es.py:62-90 — the D3 searchable documents of the
+    valid parsed uploads under the ES upsert semantics (same ``_id`` ⇒
+    last write wins): one row per doc_id, the newest by (created_at,
+    s3_key); ``s3_key`` is kept as the version column."""
     image_id = P.basename(F.col("s3_key"))
     doc = text.filter((F.col("owner") != "") & (F.col("s3_key") != "")).select(
         P.md5_id(image_id).alias("doc_id"),
@@ -67,7 +64,33 @@ def bizcards_from_text(text: DataFrame) -> DataFrame:
         ).alias("content_id"),
         "s3_key",
     )
-    return latest_by_key(doc, ["doc_id"], ["created_at", "s3_key"]).drop("s3_key")
+    return latest_by_key(doc, ["doc_id"], ["created_at", "s3_key"])
+
+
+def bizcards_from_text(text: DataFrame) -> DataFrame:
+    """upsert_bizcard_to_es.py:62-90 — derive the D3 searchable document
+    and apply the ES upsert semantics (same ``_id`` ⇒ last write wins).
+
+    Batch ingest has no arrival order, so "last" is declared as the lexic
+    max s3_key per doc_id — deterministic and idempotent. doc_id is
+    md5(image_id)[:8]; with unique filenames the upsert is a no-op dedup.
+    """
+    return latest_docs(text).drop("s3_key")
+
+
+def person_rows(text: DataFrame) -> DataFrame:
+    """One D4 person-vertex row per parsed upload, before the per-id
+    property overwrite; ``s3_key`` is kept as the version column."""
+    return text.select(
+        "s3_key",
+        P.person_id(F.col("email")).alias("id"),
+        "name",
+        "email",
+        "phone_number",
+        "company",
+        "job_title",
+        F.lower(F.col("name")).alias("_name"),
+    )
 
 
 def graph_from_text(text: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -80,28 +103,11 @@ def graph_from_text(text: DataFrame) -> tuple[DataFrame, DataFrame]:
     - edge src = md5(owner)[:8] (:96), dst = person id; self-loops skipped
       (:98); at most one edge per (src,dst) (:104-109), weight 1.0 (:101).
     """
-    base = text.select(
-        "s3_key",
-        "owner",
-        P.person_id(F.col("email")).alias("id"),
-        "name",
-        "email",
-        "phone_number",
-        "company",
-        "job_title",
-    )
-    vertices = latest_by_key(base, ["id"], ["s3_key"]).select(
-        "id",
-        "name",
-        "email",
-        "phone_number",
-        "company",
-        "job_title",
-        F.lower(F.col("name")).alias("_name"),
-    )
+    vertices = latest_by_key(person_rows(text), ["id"], ["s3_key"]).drop("s3_key")
     edges = (
-        base.select(
-            P.md5_id(F.col("owner")).alias("src"), F.col("id").alias("dst")
+        text.select(
+            P.md5_id(F.col("owner")).alias("src"),
+            P.person_id(F.col("email")).alias("dst"),
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()

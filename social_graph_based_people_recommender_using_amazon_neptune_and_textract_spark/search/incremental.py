@@ -50,7 +50,7 @@ class IncrementalIndexer:
         self.spark = spark
         self.out_dir = out_dir
         self.alive = KeyedParquetTable(
-            spark, f"{out_dir}/alive", keys=["doc_id"], order_by=["_seq"]
+            spark, f"{out_dir}/alive", keys=["doc_id"], order_by=[]
         )
         self.postings = GroupedParquetTable(
             spark, f"{out_dir}/postings", group_keys=["id"]
@@ -59,17 +59,11 @@ class IncrementalIndexer:
             spark, f"{out_dir}/doclen", group_keys=["id"]
         )
 
-    def _next_seq(self) -> int:
-        """Monotone batch sequence derived from the alive table's current
-        snapshot id — survives process restarts, so LWW order holds
-        across a maintainer that is stopped and resumed."""
-        snap = self.alive.current_snapshot()
-        return (int(snap.split("-")[1]) + 1) if snap else 1
-
     def upsert(self, batch: DataFrame) -> None:
         """Create-or-replace every document in ``batch`` (full bizcard
-        rows: doc_id, owner, name, company, job_title, addr, is_alive).
-        ``is_alive = 0`` rows delete the document from the index."""
+        rows: doc_id, owner, name, company, job_title, addr, is_alive;
+        one row per doc_id — a repeated doc_id would index its postings
+        twice). ``is_alive = 0`` rows delete the document from the index."""
         batch, ids = checkpoint(batch)  # read once, feed three sinks
         try:
             batch_ids = batch.select(F.col("doc_id").alias("id")).distinct()
@@ -77,9 +71,10 @@ class IncrementalIndexer:
             new_postings, new_doclen, _ = build_bizcard_postings(alive_rows)
             self.postings.merge(new_postings, batch_ids)
             self.doclen.merge(new_doclen, batch_ids)
-            # the alive table keys by doc_id; dead rows overwrite their
-            # doc and are filtered out at read (LWW tombstone).
-            self.alive.merge(batch.withColumn("_seq", F.lit(self._next_seq())))
+            # the alive table keys by doc_id and the arriving row always
+            # wins; dead rows overwrite their doc and are filtered out at
+            # read (LWW tombstone).
+            self.alive.merge(batch)
         finally:
             free(self.spark, ids)
 
@@ -93,7 +88,7 @@ class IncrementalIndexer:
         doclen = self.doclen.read()
         if alive is None or postings is None or doclen is None:
             raise ValueError(f"no index under {self.out_dir}: upsert first")
-        alive = alive.filter(F.col("is_alive") == 1).drop("_seq")
+        alive = alive.filter(F.col("is_alive") == 1)
         vocab = postings.groupBy("field", "tok").agg(
             F.count(F.lit(1)).alias("df")
         )

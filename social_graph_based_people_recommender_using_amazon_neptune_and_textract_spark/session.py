@@ -1,7 +1,9 @@
 """SparkSession factory tuned for the engine.
 
-Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (default 32) in a single
-JVM, but every knob below is chosen for the 1000-executor / 100 TB target:
+Local testing runs ``local[$SPARK_GRAFT_CPUS]`` (default: the CPUs this
+process may run on) in a single JVM whose heap is ``$SPARK_GRAFT_DRIVER_MEM``
+(default: half of physical memory), but every knob below is chosen for
+the 1000-executor / 100 TB target:
 
 - **AQE on** (`spark.sql.adaptive.*`): runtime re-planning gives us
   shuffle-partition coalescing, skew-join splitting (celebrity vertices in
@@ -38,12 +40,39 @@ def _local_dirs() -> str | None:
     return None
 
 
+#: Protected-storage share of unified memory (Spark's default).
+STORAGE_FRACTION = "0.5"
+
+#: Whole-stage-codegen compile cache (Spark default 100 entries). This
+#: engine serves 200+ distinct query plans from one session (the
+#: ES/Neptune-style serving model), each compiling several generated
+#: classes — at the default size the cache thrashes and every re-serve
+#: pays Janino recompilation. 2000 entries hold the full workload's
+#: bytecode (tens of MB); the same sizing argument applies to any
+#: wide-workload production deployment. Interleaved same-day A/B (fresh
+#: sessions, 30-query steady-state pass ×2 per side): 16.2/14.4 s at 100
+#: vs 10.4/12.8 s at 2000 — consistent direction in all four comparisons.
+CODEGEN_CACHE_ENTRIES = "2000"
+
+
+def _default_driver_mem() -> str:
+    """Half of physical memory. local[N] runs every task thread AND all
+    persisted blocks in the one driver JVM, so the heap is sized like N
+    executors — but never past what the machine has: a heap larger than
+    RAM (on a host without swap) lets the JVM grow until the kernel
+    OOM-kills it."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{phys // 2 // 2**20}m"
+
+
 def get_spark(
     app_name: str = "sgr-spark",
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(
+        os.environ.get("SPARK_GRAFT_CPUS") or len(os.sched_getaffinity(0))
+    )
     if shuffle_partitions is None:
         shuffle_partitions = max(2 * cpus, 8)
     builder = (
@@ -57,34 +86,14 @@ def get_spark(
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.parquet.filterPushdown", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        # local[N] runs every task thread AND all persisted blocks in the
-        # one driver JVM — size it like N executors, not like a driver.
-        # (8g with 32 task threads GC-thrashed: 4x run-to-run variance.)
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        # Protected-storage share of unified memory (Spark default 0.5).
-        # Exposed for pin-pressure probes: a bench-measured bump is the
-        # r11-verdict lever for cold-pass inflation under many live pins.
-        .config(
-            "spark.memory.storageFraction",
-            os.environ.get("SPARK_GRAFT_STORAGE_FRACTION", "0.5"),
-        )
-        # Whole-stage-codegen compile cache (Spark default 100 entries).
-        # This engine serves 200+ distinct query plans from one session
-        # (the ES/Neptune-style serving model), each compiling several
-        # generated classes — at the default size the cache thrashes and
-        # every re-serve pays Janino recompilation. 2000 entries hold
-        # the full workload's bytecode (tens of MB against a 48 GB
-        # JVM); the same sizing argument applies to any wide-workload
-        # production deployment, not just this bench. Interleaved
-        # same-day A/B (fresh sessions, 30-query steady-state pass ×2
-        # per side): 16.2/14.4 s at 100 vs 10.4/12.8 s at 2000 —
-        # consistent direction in all four comparisons (r13).
-        .config(
-            "spark.sql.codegen.cache.maxEntries",
-            os.environ.get("SPARK_GRAFT_CODEGEN_CACHE", "2000"),
-        )
+        .config("spark.memory.storageFraction", STORAGE_FRACTION)
+        .config("spark.sql.codegen.cache.maxEntries", CODEGEN_CACHE_ENTRIES)
     )
     local_dirs = _local_dirs()
     if local_dirs:

@@ -216,45 +216,17 @@ class IngestPipeline:
             .persist()
         )
 
-        # O6 — searchable documents, last-write-wins by doc_id. bizcards_
-        # from_text drops the version column; re-derive the key inputs so
-        # the merge order matches batch semantics.
-        image_id = P.basename(F.col("s3_key"))
-        doc = parsed.filter((F.col("owner") != "") & (F.col("s3_key") != "")).select(
-            P.md5_id(image_id).alias("doc_id"),
-            image_id.alias("image_id"),
-            "owner",
-            "company",
-            "name",
-            "job_title",
-            "email",
-            "phone_number",
-            "addr",
-            "created_at",
-            F.lit(1).alias("is_alive"),
-            P.content_id(
-                F.col("name"), F.col("email"), F.col("phone_number")
-            ).alias("content_id"),
-            "s3_key",
-        )
+        # O6 — searchable documents, last-write-wins by doc_id. One cut,
+        # persisted, feeds both sinks: the table and the index see the
+        # same winner of any duplicate upload within the batch.
+        doc = batch_ingest.latest_docs(parsed).persist()
         self.bizcards.merge(doc)
         self.search_index.upsert(doc)  # index stays query-current per batch
 
-        # O31-O33 — graph upserts.
-        vertices, edges = batch_ingest.graph_from_text(parsed)
-        # graph_from_text drops s3_key from vertices; rebuild with the
-        # version column for the keyed merge.
-        v_base = parsed.select(
-            "s3_key",
-            P.person_id(F.col("email")).alias("id"),
-            "name",
-            "email",
-            "phone_number",
-            "company",
-            "job_title",
-            F.lower(F.col("name")).alias("_name"),
-        )
-        self.vertices.merge(v_base)
+        # O31-O33 — graph upserts; the keyed merge applies the per-id
+        # property overwrite, so vertices enter with their version column.
+        _, edges = batch_ingest.graph_from_text(parsed)
+        self.vertices.merge(batch_ingest.person_rows(parsed))
         self.edges.merge(edges)
 
         # O7 — status table; deterministic mts from created_at.
@@ -287,6 +259,7 @@ class IngestPipeline:
         # O23 — the sink actions above already materialized `parsed`
         # through the observe node; obs.get just reads the captured row.
         self.metrics.append({"batch_id": batch_id, "errors": 0, **obs.get})
+        doc.unpersist()
         parsed.unpersist()
         batch.unpersist()
 

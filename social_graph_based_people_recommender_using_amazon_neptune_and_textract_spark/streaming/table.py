@@ -12,10 +12,12 @@ Delta/Iceberg commit protocol:
     <root>/_LATEST            ← contains "snap-000002"
 
 ``merge(batch)`` reads the current snapshot, unions the batch, keeps the
-newest row per key under the caller's declared total order
-(operators/upsert.latest_by_key), and writes the next snapshot. Because
-the merge is a pure function of (current-state, batch-rows) and the order
-is total, replaying a batch after a crash converges to the same state —
+newest row per key under the caller's declared order
+(operators/upsert.latest_by_key) with ties going to the batch row —
+the arriving write overwrites, as an ES ``_id`` or a Neptune property
+does — and writes the next snapshot. Because the merge is a pure
+function of (current-state, batch-rows), replaying a batch after a
+crash converges to the same state —
 at-least-once delivery + idempotent merge = effective exactly-once,
 exactly the reference's deterministic-id upsert argument (SURVEY §2.5).
 
@@ -89,10 +91,17 @@ class _SnapshotTable:
         return self.spark.read.parquet(f"{self.root}/{snap}")
 
 
+#: Internal merge column: 1 for batch rows, 0 for current rows, so an
+#: ``order_by`` tie goes to the arriving row. Dropped after the window.
+_ARRIVAL = "__arrival"
+
+
 class KeyedParquetTable(_SnapshotTable):
     """Row-level upsert: the newest row per key wins under the caller's
-    declared total order (O6 ES ``_id`` overwrite, O7 DynamoDB
-    update_item)."""
+    ``order_by``, and on a tie (or with an empty ``order_by``) the batch
+    row wins (O6 ES ``_id`` overwrite, O7 DynamoDB update_item). Between
+    rows of ONE batch that share a key and tie on ``order_by`` the pick
+    is unspecified; callers that need a definite winner dedup first."""
 
     def __init__(
         self,
@@ -108,9 +117,11 @@ class KeyedParquetTable(_SnapshotTable):
 
     def merge(self, batch: DataFrame) -> None:
         current = self.read()
-        merged = batch if current is None else current.unionByName(batch)
-        merged = latest_by_key(merged, self.keys, self.order_by)
-        self._write_next(merged)
+        merged = batch.withColumn(_ARRIVAL, F.lit(1))
+        if current is not None:
+            merged = current.withColumn(_ARRIVAL, F.lit(0)).unionByName(merged)
+        merged = latest_by_key(merged, self.keys, [*self.order_by, _ARRIVAL])
+        self._write_next(merged.drop(_ARRIVAL))
 
 
 class GroupedParquetTable(_SnapshotTable):

@@ -103,14 +103,18 @@ def test_pymk_invariant_under_edge_flip(spark, edge_list, user):
     assert r1 == r2
 
 
-def test_pymk_all_whale_salting_is_physical_only(spark):
+def test_pymk_all_whale_salting_is_physical_only(spark, monkeypatch):
     """The whale-salted 2-hop join (pkg/graph/pymk._hop2_pairs) is a
     physical rewrite: on a graph with a genuine celebrity vertex the
     salted plan must be row-identical to the plain join AND match the
     per-user pure-Python reference. cap=2 forces the hub (and any ring
     vertex of degree 3) through the salted path; cap=10^9 disables it."""
-    from social_graph_based_people_recommender_using_amazon_neptune_and_textract_spark.graph.pymk import (
-        pymk_all,
+    import importlib
+
+    # the package re-exports the function ``pymk``, which shadows the
+    # submodule attribute — fetch the module itself to patch its constants
+    M = importlib.import_module(
+        "social_graph_based_people_recommender_using_amazon_neptune_and_textract_spark.graph.pymk"
     )
 
     n = 24  # hub 0 → everyone, sparse ring so non-friend candidates exist
@@ -121,10 +125,11 @@ def test_pymk_all_whale_salting_is_physical_only(spark):
         [(s, d, 1.0) for s, d in edge_list], ["src", "dst", "weight"]
     )
 
-    plain = pymk_all(e, limit=100, whale_degree_cap=10**9)
-    salted = pymk_all(e, limit=100, whale_degree_cap=2, salt_r=4)
-    got_plain = sorted(map(tuple, plain.collect()))
-    got_salted = sorted(map(tuple, salted.collect()))
+    monkeypatch.setattr(M, "WHALE_DEGREE_CAP", 10**9)
+    got_plain = sorted(map(tuple, M.pymk_all(e, limit=100).collect()))
+    monkeypatch.setattr(M, "WHALE_DEGREE_CAP", 2)
+    monkeypatch.setattr(M, "SALT_R", 4)
+    got_salted = sorted(map(tuple, M.pymk_all(e, limit=100).collect()))
     assert got_plain == got_salted
     assert got_plain, "fixture must actually produce recommendations"
 

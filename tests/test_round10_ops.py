@@ -168,8 +168,8 @@ def test_semantic_dedup_aug_relation(spark):
 
 def test_pymk_served_from_pin_identical_to_live(spark):
     """The Redis read path: once the batch pin is live, pymk() serves
-    the hydrated response from the pinned named table — ordered rows
-    bit-identical to the live traversal, at any limit ≤ the pin depth."""
+    its scored rows from the pin — ordered rows bit-identical to the
+    live traversal, at any limit ≤ the pin depth."""
     from social_graph_based_people_recommender_using_amazon_neptune_and_textract_spark import (
         pinned as PIN,
     )
@@ -194,7 +194,7 @@ def test_pymk_served_from_pin_identical_to_live(spark):
         for lim in (3, 10)
     }
     G.pinned_pymk_all(e, limit=5).count()  # fill: builds the canonical pin
-    assert G._pymk_all_pin_key(e, G.WHALE_DEGREE_CAP, G.SALT_R) in PIN.pinned_keys()
+    assert G._pymk_all_pin_key(e) in PIN.pinned_keys()
     for lim in (3, 10):
         served = [
             tuple(r) for r in G.pymk(v, e, "user_3", limit=lim).collect()
@@ -203,6 +203,69 @@ def test_pymk_served_from_pin_identical_to_live(spark):
     # deeper than the pin -> falls back to the live plan, still correct
     deep = [tuple(r) for r in G.pymk(v, e, "user_3", limit=50).collect()]
     assert deep[: len(live[10])] == live[10]
+    PIN.release_all()
+
+
+def test_pymk_one_pin_serves_both_response_shapes(spark):
+    """One batch pin serves single-user PYMK in both response shapes:
+    after ``pinned_pymk_all`` the registry holds exactly one all-users
+    pin (no second, hydrated copy), ``pymk`` and ``pymk_hydrated`` read
+    their scored rows from it and equal the live traversal, and a
+    deeper batch request gets its own pin equal to ``pymk_all``."""
+    import importlib
+
+    from social_graph_based_people_recommender_using_amazon_neptune_and_textract_spark import (
+        pinned as PIN,
+    )
+    from social_graph_based_people_recommender_using_amazon_neptune_and_textract_spark.plans.audit import (
+        physical_plan,
+    )
+
+    G = importlib.import_module(
+        "social_graph_based_people_recommender_using_amazon_neptune_and_textract_spark.graph.pymk"
+    )
+    # circulant graph (i → i+1, i+2, i+5) plus one reciprocal pair: every
+    # user has more than 10 candidates with tied and bag-counted scores
+    # (the sf0.001 user graph is complete, so it has no candidates)
+    n = 30
+    edge_list = [(i, (i + k) % n) for i in range(n) for k in (1, 2, 5)]
+    edge_list.append((1, 0))
+    e = spark.createDataFrame(
+        [(a, b, 1.0) for a, b in edge_list], ["src", "dst", "weight"]
+    )
+    v = spark.createDataFrame(
+        [(i, f"User_{i}", f"user_{i}", f"co{i % 4}") for i in range(n)],
+        ["id", "name", "_name", "company"],
+    )
+    PIN.release_all()
+    shapes = (G.pymk, G.pymk_hydrated)
+    live = {
+        (f.__name__, lim): [tuple(r) for r in f(v, e, "user_3", limit=lim).collect()]
+        for f in shapes
+        for lim in (3, 10)
+    }
+    assert all(len(rows) == lim for (_, lim), rows in live.items())
+    assert "rank" not in physical_plan(G.pymk_scored(v, e, "user_3", 3))
+
+    G.pinned_pymk_all(e).count()
+    pymk_pins = [
+        k for k in PIN.pinned_keys() if isinstance(k, tuple) and "pymk_all" in str(k[0])
+    ]
+    assert pymk_pins == [G._pymk_all_pin_key(e)]
+    # the scored relation now reads the pin's rank column, not the edges
+    assert "rank" in physical_plan(G.pymk_scored(v, e, "user_3", 3))
+    for f in shapes:
+        for lim in (3, 10):
+            served = [tuple(r) for r in f(v, e, "user_3", limit=lim).collect()]
+            assert served == live[(f.__name__, lim)], (f.__name__, lim)
+
+    # deeper than the pin -> the live plan, still correct
+    deep = [tuple(r) for r in G.pymk(v, e, "user_3", limit=20).collect()]
+    assert deep[:10] == live[("pymk", 10)]
+    assert "rank" not in physical_plan(G.pymk_scored(v, e, "user_3", 20))
+
+    deep = sorted(map(tuple, G.pinned_pymk_all(e, limit=20).collect()))
+    assert deep == sorted(map(tuple, G.pymk_all(e, 20).collect()))
     PIN.release_all()
 
 

@@ -156,6 +156,74 @@ def test_streaming_late_update_wins(spark, landing, tmp_path):
     assert row[0].created_at == "2024-06-01T00:00:00Z"
 
 
+def _index_matches_rebuild(pipe, queries):
+    """The incremental index serves what a from-scratch search over the
+    pipeline's own bizcards table serves."""
+    from social_graph_based_people_recommender_using_amazon_neptune_and_textract_spark import (
+        pinned as PIN,
+    )
+    from social_graph_based_people_recommender_using_amazon_neptune_and_textract_spark import (
+        search as S,
+    )
+
+    cards = pipe.bizcards.read().drop("s3_key")
+    for q in queries:
+        got = _rows(pipe.search_index.search(q, limit=100))
+        want = _rows(S.search_bizcards(cards, q, limit=100))
+        assert got == want and got, q
+    PIN.release_all()
+
+
+def test_streaming_reupload_same_created_at_overwrites(spark, tmp_path):
+    """A re-upload of an image in a later batch carries the pipeline's
+    same fixed ``created_at``: it ties the stored row on the merge order
+    and must still overwrite it — in ``bizcards`` and ``vertices`` as in
+    the search index (ES ``_id`` / Neptune property overwrite)."""
+    recs = tables.bizcard_text_records(spark, SF_DIR).orderBy("s3_key").limit(40)
+    reup = recs.withColumn(
+        "lines",
+        F.concat(
+            F.slice("lines", 1, 2), F.array(F.lit("Director")), F.slice("lines", 4, 100)
+        ),
+    )
+    pipe = IngestPipeline(spark, str(tmp_path / "wh"))
+    pipe.process_batch(recs, 0)
+    pipe.process_batch(reup, 1)
+
+    cards = pipe.bizcards.read()
+    assert cards.count() == 40
+    assert cards.filter(F.col("job_title") != "Director").count() == 0
+    ids = batch_ingest.person_rows(batch_ingest.parse_bizcard_text(reup)).select("id")
+    verts = pipe.vertices.read().join(ids.distinct(), "id")
+    assert verts.count() > 0
+    assert verts.filter(F.col("job_title") != "Director").count() == 0
+    _index_matches_rebuild(pipe, ["director", "trading"])
+
+
+def test_streaming_duplicate_upload_in_one_batch(spark, tmp_path):
+    """Two uploads of the same image in one micro-batch index ONE
+    document: no duplicated postings or length norms, and the index
+    scores like a from-scratch index over the bizcards table."""
+    recs = tables.bizcard_text_records(spark, SF_DIR).orderBy("s3_key").limit(2)
+    again = recs.limit(1).withColumn(
+        "lines",
+        F.concat(
+            F.slice("lines", 1, 2), F.array(F.lit("Engineer")), F.slice("lines", 4, 100)
+        ),
+    )
+    pipe = IngestPipeline(spark, str(tmp_path / "wh"))
+    pipe.process_batch(recs.unionByName(again), 0)
+
+    assert pipe.bizcards.read().count() == 2
+    doclen = pipe.search_index.doclen.read()
+    assert doclen.select("id").distinct().count() == 2
+    assert doclen.count() == doclen.select("id", "field").distinct().count()
+    assert pipe.search_index.postings.read().count() == (
+        pipe.search_index.postings.read().select("id", "field", "tok").distinct().count()
+    )
+    _index_matches_rebuild(pipe, [None, "trading"])
+
+
 def test_archive_layout(spark, landing, tmp_path):
     wh = str(tmp_path / "wh")
     pipe = IngestPipeline(spark, wh)

@@ -44,15 +44,22 @@ def main() -> None:
             pass
     qs = E.queries()
     timings: dict[str, float] = {}
+    errors: dict[str, str] = {}
     for name in names:
         fn = qs[name]
         spark.sparkContext.setJobDescription(f"cold:{name}")
         t0 = time.perf_counter()
-        fn(spark, SF_DIR).count()
+        try:
+            fn(spark, SF_DIR).count()
+        except Exception as e:  # record it; the summary still prints
+            errors[name] = f"{type(e).__name__}: {e}"
+            print(f"{name}: FAILED {errors[name]}", file=sys.stderr)
+            continue
+        finally:
+            spark.sparkContext.setJobDescription(None)
         timings[name] = round(time.perf_counter() - t0, 3)
-        spark.sparkContext.setJobDescription(None)
         print(f"{name}: {timings[name]}s", file=sys.stderr)
-    print(json.dumps({"sf_dir": SF_DIR, "cold": timings,
+    print(json.dumps({"sf_dir": SF_DIR, "cold": timings, "errors": errors,
                       "total": round(sum(timings.values()), 3)}))
 
 
